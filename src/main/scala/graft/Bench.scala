@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Q
+
 /** Benchmark main: runs every gated query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Each query is fully executed
   * through a noop data sink — `.count()` alone would let Catalyst prune
@@ -31,45 +33,43 @@ object Bench {
     // cluster-bounded cosine under the same full-outer/flags contract)
     "qs02_embedding_neardup", "qp04_dedup_fusion")
 
+  /** The sf dir `Bench` and `Profile` read. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Times one gate, build AND execute: several operators materialize
+    * eagerly inside `build` (localCheckpoint, guards), so timing only
+    * the final write would under-report them. A failed query reports
+    * -1, never its (tiny) time-to-throw: a broken query must not
+    * masquerade as a fast one. After the timed window, dead
+    * localCheckpoint blocks are swept (graft.Blocks scaladoc): un-swept
+    * they accumulate across the 280-entry suite × 4 passes, pin storage
+    * memory in the shared local-mode heap, and inflate every later
+    * entry — the round-16 fixed-cost creep (common entries +10%,
+    * warehouse_build +60%). Reclaiming the PREVIOUS entry's garbage is
+    * harness work, not query work.
+    */
+  def timeOne(spark: SparkSession, q: Q, sfDir: String): Double = {
+    val sec =
+      try {
+        val t0 = System.nanoTime()
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          -1.0
+      }
+    Blocks.sweepLocalCheckpoints(spark)
+    sec
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.sfDir
+    val spark = Session.local()
 
     // one warm-up pass so JIT/codegen/classloading don't dominate query 1
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
-    // a failed query reports -1, never its (tiny) time-to-throw: a broken
-    // query must not masquerade as a fast one.
-    // After every entry, dead localCheckpoint blocks are swept
-    // (graft.Blocks scaladoc): un-swept they accumulate across the
-    // 280-entry suite × 4 passes, pin storage memory in the shared
-    // local-mode heap, and inflate every later entry — the round-16
-    // fixed-cost creep (common entries +10%, warehouse_build +60%).
-    // The sweep is OUTSIDE the timed window: reclaiming the PREVIOUS
-    // entry's garbage is harness work, not query work.
-    def timeOne(q: graft.queries.Q): Double = {
-      val sec =
-        try {
-          val t0 = System.nanoTime()
-          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-            -1.0
-        }
-      Blocks.sweepLocalCheckpoints(spark)
-      sec
-    }
     def reportPinned(tag: String): Unit = {
       val (n, mem, disk) = Blocks.storagePinned(spark)
       System.err.println(f"[bench] pinned storage $tag: rdds=$n " +
@@ -84,7 +84,7 @@ object Bench {
     // `noisy` (spread > 3x) for exactly that reason. The warm pass also
     // absorbs first-execution JIT/codegen across the suite.
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") == "1")
-      SparkEntry.allQueries.foreach(timeOne)
+      SparkEntry.allQueries.foreach(timeOne(spark, _, sfDir))
     reportPinned("after warm pass")
 
     // the one-shot star materialization, forced from scratch — this is
@@ -110,7 +110,7 @@ object Bench {
     // episode shorter than a pass inflates at most one sample per query.
     val queryList = SparkEntry.allQueries
     val passMatrix: Seq[Seq[Double]] =
-      (1 to passes).map(_ => queryList.map(timeOne))
+      (1 to passes).map(_ => queryList.map(timeOne(spark, _, sfDir)))
     val results: Seq[(String, Seq[Double])] =
       ("warehouse_build" -> Seq(warehouseSec)) +:
         queryList.zipWithIndex.map { case (q, i) =>

@@ -98,7 +98,7 @@ object Dedup {
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
     // spread-if-narrow so the shingle build and BOTH posting-list
     // explodes run at session parallelism on a one-split corpus
-    // (StageProf: the serial stages were the bulk of the gate)
+    // (Profile stages: the serial stages were the bulk of the gate)
     val sh = withShingles(
       Spread.ifNarrow(df.select(col(idCol), col(textCol)), col(idCol)),
       idCol, textCol, n).cache()
@@ -187,7 +187,7 @@ object Dedup {
       l: Int = 8, minDocs: Int = 2): DataFrame = {
     // the n-gram explode below is the pipeline's compute-dense chain
     // and is derived TWICE (gram-df aggregate + the semi-join probe) —
-    // on a one-split corpus both ran as single tasks (StageProf: the
+    // on a one-split corpus both ran as single tasks (Profile stages: the
     // two longest stages of qd13/qp06); no-op on a many-split input
     val g = Spread.ifNarrow(df.select(col(idCol), col(textCol)), col(idCol))
       .withColumn("__ws", expr(Text.wordsExpr(textCol)))
@@ -518,7 +518,7 @@ object Dedup {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
     // spread the one-split scan ahead of the shingle explode + k-perm
-    // partial-min chain and the verify cache build (r19; StageProf
+    // partial-min chain and the verify cache build (r19; Profile stages
     // showed both as serial ~300 ms single-task stages; interleaved
     // A/B min-of-3: 1.23x). The id-keyed repartition is REUSED by the
     // signature groupBy — no added exchange. qd10's incremental path

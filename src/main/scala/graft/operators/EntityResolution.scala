@@ -36,7 +36,7 @@ object EntityResolution {
     // Spread the records BEFORE the deletion-neighborhood explode and
     // materialize the neighborhood ONCE: a small entity table is one
     // scan split, so un-spread the whole O(Σ len) key generation ran as
-    // a single task inside the join's broadcast-build job (StageProf:
+    // a single task inside the join's broadcast-build job (Profile stages:
     // one 5.5 s task of a 6.6 s query at sf0.1), and both join sides
     // re-derived it. The id-keyed shuffle is record-sized — far smaller
     // than the exploded output it parallelizes (the sparseTopK

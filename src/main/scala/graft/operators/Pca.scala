@@ -243,7 +243,7 @@ object Pca {
     // left lazy, the 32-coordinate HOF projection chain gets inlined
     // into the probe join's candidate side and re-evaluates per
     // REFERENCE instead of per corpus row (measured 19 s vs 0.8 s at
-    // sf0.1, tools.PcaDiag). Persisting the compressed representation
+    // sf0.1; BASELINE.md, Round 15). Persisting the compressed representation
     // is also the honest production shape — compressing once is the
     // point of compression; at scale this table is what you'd write
     // next to the index anyway (n × outDims doubles, 2× smaller than

@@ -19,7 +19,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LeafNode, 
   * already has more splits than cores, so this is a no-op there and
   * never inserts a corpus-wide shuffle into a big pipeline.
   *
-  * Use it SELECTIVELY: only ahead of per-row work that StageProf shows
+  * Use it SELECTIVELY: only ahead of per-row work that `Profile stages` shows
   * as a long serial stage (the winnow fingerprint chain, the span-gram
   * explode, the deletion-neighborhood verify). Pipelines whose cost is
   * stage count / driver latency get slower, not faster — the added

@@ -99,7 +99,7 @@ object TextAnalysis {
       i => col(textCol).substr(i, lit(k)))
     // per-char-gram hashing + rolling minima are the suite's densest
     // row-local chain; on a one-split corpus the whole gate ran as a
-    // single 2.5 s task (StageProf) — spread-if-narrow keeps the
+    // single 2.5 s task (Profile stages) — spread-if-narrow keeps the
     // zero-shuffle shape on any many-split production scan
     Spread.ifNarrow(df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol), transform(grams, g => Text.polyhash(g)).as("__hs"))
@@ -514,7 +514,7 @@ object TextAnalysis {
 
   def lmScore(df: DataFrame, idCol: String, textCol: String,
               scale: Long = 1000000000L): DataFrame = {
-    // NOT spread (measured): StageProf's isolated run favored a
+    // NOT spread (measured): the isolated `Profile stages` run favored a
     // pre-explode spread, but the bench (min-of-3, suite context) read
     // it 0.26 s SLOWER — the bigram aggregate's own exchange already
     // parallelizes the downstream joins, so the extra shuffle only
@@ -609,7 +609,7 @@ object TextAnalysis {
     // parallelism it buys is the whole downstream pipeline's. The count
     // must be EXPLICIT: a keyed repartition with no count is
     // AQE-coalesced back to one partition on a small input, and the
-    // signature checkpoint below then pins ONE partition — StageProf
+    // signature checkpoint below then pins ONE partition — Profile stages
     // measured the entire qs16 pair pipeline (sig sort, prefix explode,
     // candidate join, verify) as a single 5.5 s task behind it.
     // defaultParallelism tracks the session's cores on any deployment.
@@ -722,7 +722,7 @@ object TextAnalysis {
     // downstream verify joins at session parallelism: candidate pairs
     // are BYTE-small (two longs) but COMPUTE-dense downstream (k-term
     // intersections per pair), so AQE's byte-based coalescing folds
-    // them into one partition and StageProf measured the whole verify
+    // them into one partition and Profile stages measured the whole verify
     // as a single 4.6 s task; distinct reuses this partitioning, so no
     // exchange is added — one is re-keyed
     val cand = pref.as("a")

@@ -59,8 +59,8 @@ object OrNullJoinRewrite extends Rule[LogicalPlan] {
     if (eq.left.references.subsetOf(side.outputSet)) eq.left else eq.right
 }
 
-/** Session extensions entry point: install with
-  * `SparkSession.builder().withExtensions(GraftExtensions.apply)`.
+/** Session extensions entry point: `graft.Session.extended` installs it
+  * on a second session beside the running one.
   *
   * Injects the optimizer rule AND registers the custom expressions as
   * SQL functions (`graft_polyhash`, `graft_dot`), so the pure-SQL

@@ -932,7 +932,7 @@ object Pipeline {
       // arm (and recallHits' key sides); materialized once so every
       // arm reads one tiny checkpointed frame instead of re-deriving
       // the corpus scan + filter per reference — measured r19 on the
-      // recall family: qs06 1.46x, qs05 1.21x, qs09 1.16x (AnnLab,
+      // recall family: qs06 1.46x, qs05 1.21x, qs09 1.16x (OPTIMIZATION_r19.md;
       // variants byte-identical). |q| = |corpus|/100 by construction,
       // so the materialization is bounded at any scale.
       val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
@@ -1163,7 +1163,7 @@ object Pipeline {
     // The exact arm of the gate is the SPLIT ITSELF (per-class held-out
     // counts, teacher labels recomputed by the oracle); the verdict arm
     // is accuracy floors set below the measured minima across
-    // sf0.001/0.01/0.1/1 (ClassifierTune: global 0.900+, class0 0.858+,
+    // sf0.001/0.01/0.1/1 (BASELINE.md, Round 15: global 0.900+, class0 0.858+,
     // class1 0.932+ → floors 0.85/0.80/0.88) — deterministic, so any
     // training/featurization regression breaks the hash.
     Q("qt27_quality_classifier", clsOracleSql) { (s, dir) =>
@@ -1982,7 +1982,7 @@ object Pipeline {
     // projected top-k is useless on these near-isotropic embeddings
     // (measured hits@10 of 0–5 — no low-variance subspace to drop);
     // the rerank repairs it to minima 10/10/8/3 at sf0.001/0.01/0.1/1
-    // (tools.PcaTune; the sf1 dip is the fixed 256 shortlist being a
+    // (BASELINE.md, Round 15; the sf1 dip is the fixed 256 shortlist being a
     // smaller corpus fraction, the same qs09 behavior) → floor 2.
     // Training is one decimal-exact distributed moment pass, so the
     // model — and with it this gate — is bit-reproducible.
@@ -2019,7 +2019,7 @@ object Pipeline {
     // Sub-linear candidates (nprobe=4 of 8 projected-space cells) AND
     // compressed per-pair distances, exact rerank on the true vectors.
     // Measured min hits@10 = 6 / 4 / 5 / 3 at sf0.001/0.01/0.1/1
-    // (tools.PcaTune ivfRerank, shortlist=256) → floor 2, same as
+    // (BASELINE.md, Round 15; ivfRerank, shortlist=256) → floor 2, same as
     // qs25 — the index costs nothing the rerank doesn't repair here,
     // while cutting the candidate scan by nprobe/ivfK.
     Q("qs27_pca_ivf_recall", pcaRecallOracleSql) { (s, dir) =>

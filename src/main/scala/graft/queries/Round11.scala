@@ -53,8 +53,8 @@ object Round11 {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** qj17's extensions-enabled session (one per JVM, shares the
-    * SparkContext; the active/default session is restored immediately
-    * so other gates never see it).
+    * SparkContext; `Session.extended` keeps the caller's session the
+    * active/default one, so other gates never see it).
     */
   private val extendedSessions =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.SparkSession]()
@@ -547,16 +547,8 @@ object Round11 {
         |SELECT band, COUNT(*) AS n
         |FROM e JOIN b ON t >= lo AND t <= hi
         |GROUP BY band""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.SparkSession
       val s2 = extendedSessions.computeIfAbsent("ext", { _ =>
-        val prev = SparkSession.getActiveSession
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        val es = SparkSession.builder()
-          .withExtensions(graft.plans.GraftExtensions.apply)
-          .getOrCreate()
-        prev.foreach(SparkSession.setActiveSession)
-        prev.foreach(SparkSession.setDefaultSession)
+        val es = graft.Session.extended(s)
         es.conf.set("spark.graft.rangeJoin.binWidth", "3600000000")
         es
       })

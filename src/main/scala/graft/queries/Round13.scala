@@ -389,7 +389,7 @@ object Round13 {
     // paths are deterministic, so `hits >= floor` is a reproducible
     // integer the oracle can state as all-ones; measured min hits@10 =
     // 8 at sf0.001, 7 at sf0.01, 6 at sf0.1, 7 at sf1
-    // (tools.HybridTune) — fusion shares the whole lexical arm, so
+    // (BASELINE.md, Round 14) — fusion shares the whole lexical arm, so
     // fused overlap sits above the raw qs06 floor; gate floor 4 keeps
     // the qs05-style safety margin under the measured minima).
     Q("qs23_hybrid_ann_recall",

@@ -3,31 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** The injected optimizer rule must (a) remove the
   * BroadcastNestedLoopJoin from a naive null-wildcard theta join and
   * (b) leave the results identical.
   */
 class OrNullJoinRewriteSpec extends SparkSpec {
 
-  private def withExtendedSession[T](f: SparkSession => T): T = {
-    // a second SparkSession on the same SparkContext, with extensions
-    val prev = spark // force shared session init first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(GraftExtensions.apply)
-      .getOrCreate()
-    try f(s)
-    finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
-  }
+  // a second SparkSession on the same SparkContext, with extensions
+  private def withExtendedSession[T](f: SparkSession => T): T =
+    f(Session.extended(spark))
 
   private def thetaJoin(s: SparkSession) = {
     val nation = Tables(s, sfDir, "nation")

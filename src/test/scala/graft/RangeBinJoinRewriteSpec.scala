@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** RangeBinJoinRewrite: a pure range join (no equi keys) must lose its
   * nested-loop plan under the rule and keep identical rows —
   * including multiplicity, inverted intervals, NULLs, and negative
@@ -13,22 +11,9 @@ import graft.plans.GraftExtensions
 class RangeBinJoinRewriteSpec extends SparkSpec {
 
   private def withExtendedSession[T](width: Long)(f: SparkSession => T): T = {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(GraftExtensions.apply)
-      .getOrCreate()
+    val s = Session.extended(spark)
     s.conf.set("spark.graft.rangeJoin.binWidth", width.toString)
-    try f(s)
-    finally {
-      s.conf.unset("spark.graft.rangeJoin.binWidth")
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
+    f(s)
   }
 
   private def points(s: SparkSession) = {
